@@ -176,6 +176,24 @@ def test_theil_u_deterministic_and_independent(spark):
     assert got3["u_a_given_b"] is None and got3["h_a_micro"] == 0
 
 
+def test_theil_u_null_keys_match_q363_oracle(spark):
+    import duckdb
+
+    from ultraviolet_spark.queries import REGISTRY
+
+    # NULL-keyed rows are outside the (a, b) table: they must count
+    # neither in n nor in any entropy, exactly as the oracle filters
+    rows = ([(f"l{i % 3}", f"s{(i * 7) % 4}") for i in range(30)]
+            + [(None, "s0"), ("l1", None), (None, None), (None, "s2")])
+    df = spark.createDataFrame(rows, "lang string, source string")
+    got = theil_u(df, a_col="lang", b_col="source").head().asDict()
+    con = duckdb.connect()
+    con.register("documents", df.toPandas())
+    cur = con.execute(REGISTRY["q363_theil_u"].sql)
+    want = dict(zip([d[0] for d in cur.description], cur.fetchone()))
+    assert got == want
+
+
 # ---------------------------------------------------------- lambda
 
 def test_gk_lambda_perfect_zero_and_guards(spark):

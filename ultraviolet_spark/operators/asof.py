@@ -254,7 +254,7 @@ def multi_horizon_asof(left: DataFrame, right: DataFrame, *,
     :func:`asof_join` (same cogroup/mergesort machinery, same
     salting/bucketing options via ``asof_kwargs``), chained left to
     right.  H horizons = H cogroups; on a ``write_bucketed`` layout
-    each plans exchange-free like the flagship.
+    each plans exchange-free (``bucket_col``).
 
     The usual backward-as-of caveat applies doubly here: duplicate
     right (key, ts) rows resolve by position in pandas — pre-aggregate

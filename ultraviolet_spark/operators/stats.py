@@ -4459,7 +4459,7 @@ def theil_u(df: DataFrame, *, a_col: str, b_col: str) -> DataFrame:
     contribution snaps BEFORE its sum, so I, H(A), H(B) are
     order-independent integer µ-nat totals and each U is ONE double
     division.  Zero entropy (constant column) → NULL for the U's it
-    denominates.
+    denominates.  Rows with a NULL a or b are dropped, as q363 does.
 
     Scale: the q262 shape — one (a, b) cell exchange + two marginal
     aggs joined cell-frame-sized; the three totals fold to one row.
@@ -4469,9 +4469,10 @@ def theil_u(df: DataFrame, *, a_col: str, b_col: str) -> DataFrame:
     """
     d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     nz = lambda den: F.when(den != 0, den)  # noqa: E731
-    cells = df.groupBy(F.col(a_col).alias("a"),
-                       F.col(b_col).alias("b")).agg(
-        F.count("*").cast("long").alias("n_ab"))
+    cells = (df.filter(F.col(a_col).isNotNull()
+                       & F.col(b_col).isNotNull())
+             .groupBy(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
+             .agg(F.count("*").cast("long").alias("n_ab")))
     ma = cells.groupBy("a").agg(F.sum("n_ab").cast("long").alias("n_a"))
     mb = cells.groupBy("b").agg(F.sum("n_ab").cast("long").alias("n_b"))
     tot = cells.agg(F.sum("n_ab").cast("long").alias("__n"))

@@ -102,18 +102,6 @@ def dedup_latest(df: DataFrame, *, by: list[str], order: str,
     )
 
 
-def top_k_per_key(df: DataFrame, *, by: str, order_col: str, k: int,
-                  ascending: bool = False) -> DataFrame:
-    w = Window.partitionBy(by).orderBy(
-        F.col(order_col).asc() if ascending else F.col(order_col).desc()
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
 def with_change_features(df: DataFrame, *, by: str = "url",
                          order: str = "warc_ts", text_col: str = "text",
                          tiebreak: str | None = None) -> DataFrame:

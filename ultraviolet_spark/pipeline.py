@@ -2,12 +2,13 @@
 
     pages ──extract_stage(mapInArrow: decode+validate+extract)──▶ text_extracted
           ──feature_vector(window ops, one shuffle on url)──────▶ features
-          ──asof_join(features ⟕ feature_src)───────────────────▶ enriched
+          ──backward as-of against each url's first crawl───────▶ enriched
 
-Shuffle census at scale: extract_stage is shuffle-free; feature_vector
-costs ONE hash exchange on `url` (all window functions share the same
-partitioning); asof_join costs one exchange per side on the url-hash
-bucket.  Nothing else moves data.
+Shuffle census at scale: ONE hash exchange on `url` for the whole
+flagship.  extract_stage is shuffle-free; every feature window shares
+that partitioning and (url, warc_ts) sort, and the as-of enrichment is
+one more window over the same frame, so it reuses them.  Nothing else
+moves data (tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -16,9 +17,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ultraviolet_spark.functions.udfs import cp_class_hist_udf, extract_stage
-from ultraviolet_spark.operators.asof import asof_join
 from ultraviolet_spark.operators.windows import (
     SESSION_GAP_SECS_DEFAULT,
+    _w,
     sessionize,
     with_ffill,
     with_lags,
@@ -75,28 +76,20 @@ def compute_features(pages: DataFrame, **kwargs) -> DataFrame:
     return feature_vector(extract_stage(pages, with_features=True), **kwargs)
 
 
-def enrich_asof(features: DataFrame, feature_src: DataFrame, **kwargs) -> DataFrame:
-    """features ⟕ (backward as-of) feature_src on (url, warc_ts)."""
-    return asof_join(features, feature_src, **kwargs)
+def _with_first_text_len(features: DataFrame, keys: str | list[str]) -> DataFrame:
+    """features ⟕ (backward as-of) each url's first-crawl row, keeping
+    its text_len as ``first_text_len``.  Every row is at or after its
+    url's first crawl, so the as-of value is first() over the feature
+    windows' own frame (unbounded preceding .. current row): it reuses
+    their exchange and sort, and cannot see the future."""
+    return features.withColumn(
+        "first_text_len", F.first("text_len").over(_w(keys, "warc_ts")))
 
 
 def flagship_enriched(pages: DataFrame, **kwargs) -> DataFrame:
     """pages → features → backward-as-of enrichment against the per-url
-    first-crawl snapshot.  The feature DataFrame feeds BOTH join sides,
-    so it is persisted before branching — without this the whole
-    transcode+window pipeline would execute twice (on a cluster the
-    snapshot layer materializes it instead; see
-    run_checkpointed_pipeline)."""
-    from pyspark import StorageLevel
-
-    from ultraviolet_spark.operators.windows import dedup_latest
-
-    features = compute_features(pages, **kwargs).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    src = dedup_latest(features, by=["url"], order="warc_ts", keep="first").select(
-        "url", "warc_ts", F.col("text_len").alias("first_text_len"))
-    return enrich_asof(features, src, on="warc_ts", by="url",
-                       value_cols=["first_text_len"])
+    first-crawl snapshot, all in one url shuffle."""
+    return _with_first_text_len(compute_features(pages, **kwargs), "url")
 
 
 def flagship_over_bucketed(spark, table: str, **kwargs) -> DataFrame:
@@ -107,20 +100,13 @@ def flagship_over_bucketed(spark, table: str, **kwargs) -> DataFrame:
     This is the 100 TB production shape: transcode+extract is
     shuffle-free row-parallel work paid once at ingest, the bucketed
     (uv_bucket / url, warc_ts-sorted) layout is written once, and every
-    subsequent feature/as-of run over it shuffles NOTHING — windows
-    partition by (bucket, key) and the as-of cogroup consumes the
-    materialized bucket directly."""
-    from ultraviolet_spark.operators.windows import dedup_latest
+    subsequent feature/as-of run over it shuffles NOTHING — every
+    window, the as-of one included, partitions by (bucket, url)."""
     from ultraviolet_spark.plans.layout import BUCKET_COL, read_bucketed
 
     te = read_bucketed(spark, table)
     features = feature_vector(te, bucket_col=BUCKET_COL, **kwargs)
-    src = dedup_latest(
-        features, by=[BUCKET_COL, "url"], order="warc_ts", keep="first"
-    ).select(BUCKET_COL, "url", "warc_ts",
-             F.col("text_len").alias("first_text_len"))
-    return enrich_asof(features, src, on="warc_ts", by="url",
-                       value_cols=["first_text_len"], bucket_col=BUCKET_COL)
+    return _with_first_text_len(features, [BUCKET_COL, "url"])
 
 
 def run_checkpointed_pipeline(spark, pages: DataFrame, warehouse: str,
@@ -134,7 +120,6 @@ def run_checkpointed_pipeline(spark, pages: DataFrame, warehouse: str,
 
     Returns (enriched_features_df, {stage: resumed_bool}).
     """
-    from ultraviolet_spark.operators.windows import dedup_latest
     from ultraviolet_spark.plans.snapshots import (
         ParquetSnapshotFormat,
         fingerprint,
@@ -163,13 +148,8 @@ def run_checkpointed_pipeline(spark, pages: DataFrame, warehouse: str,
         observe={"total_text_len": F.sum("text_len"),
                  "max_session_id": F.max("session_id")})
 
-    def build_enriched() -> DataFrame:
-        src = dedup_latest(feats, by=["url"], order="warc_ts", keep="first").select(
-            "url", "warc_ts", F.col("text_len").alias("first_text_len"))
-        return enrich_asof(feats, src, on="warc_ts", by="url",
-                           value_cols=["first_text_len"])
-
     fp3 = fingerprint("features_enriched", fp2)
     enriched, resumed["features_enriched"] = run_stage(
-        spark, fmt, "features_enriched", fp3, build_enriched)
+        spark, fmt, "features_enriched", fp3,
+        lambda: _with_first_text_len(feats, "url"))
     return enriched, resumed

@@ -6,9 +6,9 @@ Two materialized layouts:
   ``sortBy`` + ``saveAsTable``): N hash buckets on a key column, rows
   sorted within each bucket file.  A scan of the table reports
   ``hashpartitioning(key, N)``, so every downstream ``groupBy(key)``,
-  equi-join on key, window ``partitionBy(key)`` and — via
-  ``asof_join(bucket_col=...)`` — the flagship as-of cogroup plans with
-  ZERO exchanges (asserted in tests/test_layout.py).  This is the
+  equi-join on key, window ``partitionBy(key)`` (the whole flagship
+  included) and — via ``asof_join(bucket_col=...)`` — the as-of cogroup
+  plans with ZERO exchanges (asserted in tests/test_layout.py).  This is the
   Iceberg ``bucket(N, url)`` partition transform's local equivalent; on
   a cluster the same DataFrame goes through ``writeTo(...).partitionedBy
   (bucket(N, col))``.

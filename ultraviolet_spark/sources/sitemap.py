@@ -1,7 +1,7 @@
 """Sitemap source (sitemaps.org XML protocol) — the crawl-discovery
 feed: sites publish ``<urlset>`` documents listing URLs with optional
-lastmod/changefreq/priority, and index files (``<sitemapindex>``)
-pointing at child sitemaps.
+lastmod/changefreq/priority.  Index files (``<sitemapindex>``), which
+point at child sitemaps, are read by ``operators.sitemap``.
 
 Parsing is Spark 4's native ``from_xml`` (Catalyst, JVM-side — no
 Python in the scan); one sitemap document is one row in, up to 50k URL
@@ -29,13 +29,6 @@ URLSET_SCHEMA = T.StructType([
     T.StructField("url", T.ArrayType(_URL_ENTRY)),
 ])
 
-INDEX_SCHEMA = T.StructType([
-    T.StructField("sitemap", T.ArrayType(T.StructType([
-        T.StructField("loc", T.StringType()),
-        T.StructField("lastmod", T.StringType()),
-    ]))),
-])
-
 
 def parse_sitemap(df: DataFrame, *, xml_col: str = "sitemap_xml",
                   host_col: str = "host") -> DataFrame:
@@ -60,27 +53,6 @@ def parse_sitemap(df: DataFrame, *, xml_col: str = "sitemap_xml",
                 .alias("lastmod"),
                 e["changefreq"].alias("changefreq"),
                 e["priority"].alias("priority")))
-
-
-def parse_sitemap_index(df: DataFrame, *, xml_col: str = "sitemap_xml",
-                        host_col: str = "host") -> DataFrame:
-    """``(host, child_loc, lastmod)`` — one row per child sitemap in a
-    ``<sitemapindex>`` document (the fetch loop reads these to discover
-    the leaf urlsets)."""
-    parsed = F.from_xml(F.col(xml_col), INDEX_SCHEMA)
-    e = F.col("__e")
-    return (df
-            .select(F.col(host_col).alias("host"),
-                    F.explode(parsed["sitemap"]).alias("__e"))
-            .select("host",
-                    e["loc"].alias("child_loc"),
-                    F.coalesce(
-                        F.try_to_timestamp(
-                            e["lastmod"],
-                            F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-                        F.try_to_timestamp(e["lastmod"],
-                                           F.lit("yyyy-MM-dd")))
-                    .alias("lastmod")))
 
 
 def build_sitemap(urls: DataFrame, *, host_col: str = "host",
