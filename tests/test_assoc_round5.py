@@ -400,6 +400,31 @@ def test_decision_stump_finds_planted_threshold(spark):
     assert g2["gain_micro"] == 0 and g2["threshold_micro"] == 0
 
 
+def test_decision_stump_no_data_sized_broadcast(spark):
+    """ADVICE: the threshold lookup used to broadcast the candidate frame
+    (one row per distinct feature value, ~N rows for a continuous
+    feature).  Pin the plan: every broadcast hash join builds on a
+    bounded frame (B-row bucket offsets, 1-row max gain, 1-row winner),
+    never on a value-keyed one."""
+    import re
+
+    from ultraviolet_spark.operators.stats import decision_stump
+
+    rows = [(float(i) + 0.001 * i, i % 3) for i in range(500)]
+    df = spark.createDataFrame(rows, "x double, y int")
+    plan = decision_stump(df, feature_col="x", label_expr="y")._jdf \
+        .queryExecution().executedPlan().toString()
+    build_keys = [
+        (right if side == "Right" else left)
+        for left, right, side in re.findall(
+            r"BroadcastHashJoin \[([^\]]*)\], \[([^\]]*)\], \w+, Build(Left|Right)",
+            plan)]
+    assert build_keys, plan
+    assert not [k for k in build_keys
+                if re.match(r"(__tv|__v)#", k)], build_keys
+    assert [k for k in build_keys if k.startswith("threshold_micro#")], build_keys
+
+
 # ------------------------------------------------ two-prop z (r5 #3)
 
 def test_two_prop_ztest_direction_clamp_and_reference(spark):

@@ -70,3 +70,19 @@ def test_same_x_pairs_excluded_and_degenerate_null(spark):
                               x_col="x", y_col="y",
                               tiebreak_col="tb").head()
     assert got["slope_micro"] is None and got["n_anchors"] == 0
+
+
+def test_middle_sums_past_bigint_stay_exact(spark):
+    # x one micro-unit apart, y 5e12 micro-units apart: every pair's
+    # micro-slope is 5e18, so the sum of the two middles is 1e19, past
+    # BIGINT's 9.2e18 (key "in": even inner count n-1 = 2; key "out":
+    # even outer count of 4 anchors).  The mean itself fits a long.
+    series = {
+        "in": [(i * 1e-6, i * 5e6) for i in range(3)],
+        "out": [(i * 1e-6, i * 5e6) for i in range(4)],
+    }
+    got = siegel_slope_by_key(_mk(spark, series), by="k", x_col="x",
+                              y_col="y", tiebreak_col="tb").collect()
+    got = {r["k"]: r["slope_micro"] for r in got}
+    assert got == {k: _ref(pts) for k, pts in series.items()}
+    assert got["in"] == got["out"] == 5 * 10**18

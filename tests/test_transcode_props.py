@@ -2,11 +2,18 @@
 
 from __future__ import annotations
 
+import codecs
+
 import numpy as np
-from hypothesis import given, settings
+import pyarrow as pa
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from ultraviolet_spark.kernels.buffers import list_from_rows, rows_from_list
+from ultraviolet_spark.kernels.buffers import (
+    binary_to_offsets,
+    list_from_rows,
+    rows_from_list,
+)
 from ultraviolet_spark.kernels.encode import (
     codepoints_to_utf8,
     codepoints_to_utf16,
@@ -114,16 +121,93 @@ def test_detect_bom_and_auto():
     assert BOM_NAMES[bom].tolist() == [
         "utf-8", "utf-16le", "utf-16be", "utf-32le", "utf-32be", "none", "none",
     ]
-    cp, cpo, n_repl, _ = decode_auto(data, offsets)
-    got = _cp_rows(cp, cpo)
-    assert got[0] == [ord(c) for c in "plain utf8"]
-    assert got[1] == [ord("h"), ord("i")]
-    assert got[2] == [ord("h"), ord("i")]
-    assert got[3] == [ord("h")]
-    assert got[4] == [ord("h")]
-    assert got[5] == [ord(c) for c in "no bom"]
-    assert got[6] == []
+    u8, u8o, n_repl, bom2 = decode_auto(data, offsets)
+    assert list_from_rows(u8, u8o) == [
+        b"plain utf8", b"hi", b"hi", b"h", b"h", b"no bom", b""]
     assert not n_repl.any()
+    assert bom2.tolist() == bom.tolist()
+
+
+# The reference rule (perfbench's oracle): sniff the BOM, UTF-32LE before
+# UTF-16LE since its BOM starts with the UTF-16LE one; no BOM → UTF-8.
+_SNIFF = (
+    (b"\xff\xfe\x00\x00", "utf-32-le", "utf-32le"),
+    (b"\x00\x00\xfe\xff", "utf-32-be", "utf-32be"),
+    (b"\xef\xbb\xbf", "utf-8", "utf-8"),
+    (b"\xff\xfe", "utf-16-le", "utf-16le"),
+    (b"\xfe\xff", "utf-16-be", "utf-16be"),
+)
+_BOM_CODEC = {b"": "utf-8", **{bom: codec for bom, codec, _ in _SNIFF}}
+_REPL_HITS: list[int] = []
+
+
+def _count_replace(exc):
+    _REPL_HITS.append(1)
+    return "\ufffd", exc.end
+
+
+codecs.register_error("uv-count-replace", _count_replace)
+
+
+def _cpython_decode_auto(raw):
+    """(utf-8 bytes, U+FFFD replacements, BOM name) by CPython's codecs."""
+    if raw is None:
+        return b"", 0, "none"
+    body, codec, name = raw, "utf-8", "none"
+    for bom, c, n in _SNIFF:
+        if raw.startswith(bom):
+            body, codec, name = raw[len(bom):], c, n
+            break
+    _REPL_HITS.clear()
+    text = body.decode(codec, errors="uv-count-replace")
+    return text.encode("utf-8"), len(_REPL_HITS), name
+
+
+@st.composite
+def _bom_row(draw):
+    bom = draw(st.sampled_from(list(_BOM_CODEC)))
+    body = draw(st.one_of(
+        st.binary(max_size=24),
+        st.binary(min_size=256, max_size=1536),
+        st.text(max_size=400).map(lambda t: t.encode(_BOM_CODEC[bom])),
+    ))
+    return bom + body
+
+
+_ROWS_SMALL = [
+    b"\xff\xfe" + ("ab" * 3).encode("utf-16-le"),
+    b"plain",
+    b"\xfe\xff" + ("xy" * 2).encode("utf-16-be"),
+    b"",
+]
+_ROWS_BIG = [
+    b"\xff\xfe" + ("ab" * 900).encode("utf-16-le"),
+    b"plain " * 300,
+    b"\xfe\xff" + ("xy" * 800).encode("utf-16-be"),
+    b"\xff\xfe" + ("m" * 1200).encode("utf-16-le"),
+]
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.none() | _bom_row(), max_size=12))
+@example([None])
+@example([b""])
+@example([bom for bom in _BOM_CODEC if bom] + [None, b""])   # lone BOMs
+@example([b"\xff\xfea\x00b", b"\xfe\xff\x00a\x00", b"a\x00b"])  # odd UTF-16
+@example([b"\xef\xbb\xbf\xe4\xb8", b"abc\xf0\x9f\x98", b"\xe4"])  # truncated
+@example([b"\xff" * 7, b"\xff\xfe" + b"\xff" * 9, b"\xff" * 300])
+@example(_ROWS_SMALL)
+@example(_ROWS_BIG)
+def test_decode_auto_mixed_boms_match_cpython(rows):
+    """Mixed-BOM batches (tiny and KB-sized rows, hostile bytes, nulls)
+    decode row for row to CPython's UTF-8 with the same U+FFFD count."""
+    data, offsets, _ = binary_to_offsets(pa.array(rows, type=pa.large_binary()))
+    u8, u8o, n_repl, bom = decode_auto(data, offsets)
+    want = [_cpython_decode_auto(r) for r in rows]
+    assert list_from_rows(u8, u8o) == [w[0] for w in want]
+    assert n_repl.tolist() == [w[1] for w in want]
+    assert BOM_NAMES[bom].tolist() == [w[2] for w in want]
+    assert len(u8) == u8o[-1]
 
 
 @settings(max_examples=200, deadline=None)
@@ -174,37 +258,6 @@ def test_utf32_fast_path_equals_general(rows):
         assert nr_f.tolist() == nr_g[:n].tolist() == [0] * n
         want = [[ord(c) for c in r] for r in rows]
         assert _cp_rows(cp_f, cpo_f) == want
-
-
-def test_decode_auto_slice_gather_matches_fancy():
-    """KB-sized rows take the slice-memcpy gather/scatter branch in
-    decode_auto; tiny rows take the fancy-index branch.  Same logical
-    rows through both (padded vs not) must produce identical codepoints."""
-    rows_small = [
-        b"\xff\xfe" + ("ab" * 3).encode("utf-16-le"),
-        b"plain",
-        b"\xfe\xff" + ("xy" * 2).encode("utf-16-be"),
-        b"",
-    ]
-    rows_big = [
-        b"\xff\xfe" + ("ab" * 900).encode("utf-16-le"),
-        b"plain " * 300,
-        b"\xfe\xff" + ("xy" * 800).encode("utf-16-be"),
-        b"\xff\xfe" + ("m" * 1200).encode("utf-16-le"),
-    ]
-    for rows in (rows_small, rows_big):
-        data, offsets = rows_from_list(rows)
-        cp, cpo, n_repl, bom = decode_auto(data, offsets)
-        want = []
-        for r in rows:
-            if r.startswith(b"\xff\xfe"):
-                want.append([ord(c) for c in r[2:].decode("utf-16-le", "replace")])
-            elif r.startswith(b"\xfe\xff"):
-                want.append([ord(c) for c in r[2:].decode("utf-16-be", "replace")])
-            else:
-                want.append([ord(c) for c in r.decode("utf-8", "replace")])
-        assert _cp_rows(cp, cpo) == want
-        assert not n_repl.any()
 
 
 def test_cjk_dense_decode_throughput_regression():

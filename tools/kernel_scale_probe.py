@@ -18,7 +18,6 @@ def work(args):
     import pyarrow as pa
 
     from ultraviolet_spark.kernels.buffers import binary_to_offsets
-    from ultraviolet_spark.kernels.encode import codepoints_to_utf8
     from ultraviolet_spark.kernels.extract import extract_text
     from ultraviolet_spark.kernels.transcode import decode_auto
 
@@ -27,8 +26,7 @@ def work(args):
     arr = pa.array([html] * rows, type=pa.large_binary())
     data, offsets, _ = binary_to_offsets(arr)
     for _ in range(reps):
-        cp, cpo, nr, bom = decode_auto(data, offsets)
-        u8, u8o = codepoints_to_utf8(cp, cpo)
+        u8, u8o, _, _ = decode_auto(data, offsets)
         extract_text(u8, u8o)
     return 0
 

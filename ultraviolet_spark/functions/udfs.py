@@ -31,7 +31,6 @@ from ultraviolet_spark.kernels.buffers import (
     offsets_to_pyarrow_string,
 )
 from ultraviolet_spark.kernels.classify import K, codepoint_class_histogram
-from ultraviolet_spark.kernels.encode import codepoints_to_utf8
 from ultraviolet_spark.kernels.extract import extract_text
 from ultraviolet_spark.kernels.transcode import BOM_NAMES, decode_auto, transcode
 from ultraviolet_spark.kernels.utf8 import (
@@ -48,9 +47,9 @@ TEXT_EXTRACTED_FIELDS = [
     T.StructField("bom", T.StringType()),
 ]
 
-# appended when with_features=True (fused kernel pass — the codepoints
-# are already materialized in the worker, so the histogram costs no
-# extra JVM→Python crossing)
+# appended when with_features=True (fused kernel pass — the extracted
+# text is already in the worker, so the histogram costs no extra
+# JVM→Python crossing)
 TEXT_FEATURE_FIELDS = [
     T.StructField("text_len", T.LongType()),
     T.StructField("cp_hist", T.ArrayType(T.LongType())),
@@ -167,8 +166,7 @@ def transcode_extract_batches(
     for batch in batches:
         html = batch.column(html_col)
         data, offsets, nulls = binary_to_offsets(html)
-        cp, cpo, n_repl, bom = decode_auto(data, offsets)
-        u8, u8o = codepoints_to_utf8(cp, cpo)
+        u8, u8o, n_repl, bom = decode_auto(data, offsets)
         ext, exto = extract_text(u8, u8o)
 
         cols, names = [], []

@@ -4,7 +4,8 @@ Mirrors CPython ``bytes.decode('utf-16-le'|'utf-16-be', 'replace')``:
 well-formed surrogate pairs combine; lone surrogates and an odd
 trailing byte each become one U+FFFD.  A BOM is NOT stripped here
 (U+FEFF decodes as content, exactly like the endian-explicit CPython
-codecs); BOM handling lives in transcode.decode_auto.
+codecs); transcode.decode_auto decodes BOM rows with the BOM attached
+and strips its U+FEFF from the UTF-8 output.
 """
 
 from __future__ import annotations

@@ -377,8 +377,8 @@ def utf8_to_codepoints(data: np.ndarray, offsets: np.ndarray):
 
 
 def utf8_to_codepoints_with_repl(data: np.ndarray, offsets: np.ndarray):
-    """Fused decode + replacement count: ONE pad + ONE analysis pass
-    (decode_auto previously paid both twice).  Returns
+    """Fused decode + replacement count: ONE pad + ONE analysis pass.
+    Returns
     (cp u32, cp_offsets i64[n+1], n_repl i64[n])."""
     n = len(offsets) - 1
     total = int(offsets[-1])

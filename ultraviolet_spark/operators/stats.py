@@ -14,8 +14,20 @@ type losslessly for pruning decisions (numeric callers cast back).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def d38(c: Column) -> Column:
+    """Exact-integer arithmetic: cast to DECIMAL(38,0) before products
+    and sums that can leave the int64 range."""
+    return c.cast("decimal(38,0)")
+
+
+def nz(den: Column) -> Column:
+    """``den``, or NULL where it is 0 (SQL ``NULLIF(den, 0)``), so a
+    degenerate ratio comes out NULL instead of raising."""
+    return F.when(den != 0, den)
 
 
 def table_stats(df: DataFrame, *, cols: list[str] | None = None) -> DataFrame:
@@ -870,10 +882,9 @@ def mutual_information(df: DataFrame, *, col_a: str,
     tot = cells.agg(F.sum("n_ab").alias("__n"))
     j = (cells.join(ma, "a").join(mb, "b")
          .crossJoin(F.broadcast(tot)))
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")
     pmi_micro = F.round(
-        (F.log((d38("__n") * d38("n_ab")).cast("double"))
-         - F.log((d38("n_a") * d38("n_b")).cast("double"))) * 1e6
+        (F.log((d38(F.col("__n")) * d38(F.col("n_ab"))).cast("double"))
+         - F.log((d38(F.col("n_a")) * d38(F.col("n_b"))).cast("double"))) * 1e6
     ).cast("long")
     j = j.withColumn("pmi_micro", pmi_micro)
     contrib = F.round(
@@ -980,7 +991,6 @@ def cuped_adjust(users: DataFrame, *, x_col: str, y_col: str,
     """
     x = F.col(x_col).cast("long")
     y = F.col(y_col).cast("long")
-    d38 = lambda c: c.cast("decimal(38,0)")
     base = users.select(F.col(variant_col).alias("variant"),
                         x.alias("x"), y.alias("y"))
     pooled = base.agg(
@@ -1122,10 +1132,9 @@ def mantel_haenszel(df: DataFrame, *, stratum_col: str, group_expr: str,
         F.sum(F.when(~g & y, 1).otherwise(0)).cast("long").alias("c"),
         F.sum(F.when(~g & ~y, 1).otherwise(0)).cast("long").alias("d"))
     n = F.col("a") + F.col("b") + F.col("c") + F.col("d")
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")
-    num_t = F.round((d38("a") * d38("d")).cast("double")
+    num_t = F.round((d38(F.col("a")) * d38(F.col("d"))).cast("double")
                     / n.cast("double") * 1e6).cast("long")
-    den_t = F.round((d38("b") * d38("c")).cast("double")
+    den_t = F.round((d38(F.col("b")) * d38(F.col("c"))).cast("double")
                     / n.cast("double") * 1e6).cast("long")
     agg = cells.agg(
         F.count("*").alias("n_strata"),
@@ -1177,11 +1186,10 @@ def eb_beta_binomial(df: DataFrame, *, key_col: str, trials_col: str,
     p_micro = F.round(F.col("x").cast("double")
                       / F.col("n").cast("double") * 1e6).cast("long")
     base = base.filter(F.col("n") > 0).withColumn("p_micro", p_micro)
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")
     prior = base.agg(
         F.count("*").alias("__k"),
         F.sum("p_micro").alias("__sp"),
-        F.sum(d38("p_micro") * d38("p_micro")).alias("__spp"))
+        F.sum(d38(F.col("p_micro")) * d38(F.col("p_micro"))).alias("__spp"))
     dk = F.col("__k").cast("double")
     mu = F.col("__sp").cast("double") / dk / F.lit(1e6)
     # population variance of proportions, in rate² units
@@ -1245,14 +1253,13 @@ def ratio_jackknife(df: DataFrame, *, num_col: str, den_col: str,
     num = F.round(F.col(num_col).cast("double") * 1e6).cast("long")
     den = F.round(F.col(den_col).cast("double") * 1e6).cast("long")
     b = (md5_bucket256(F.col(id_col)) % F.lit(int(n_buckets))).cast("int")
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")
     per_b = (df.select(b.alias("b"), num.alias("u"), den.alias("v"))
              .groupBy("b")
              .agg(F.count("*").alias("c"),
                   F.sum("u").alias("bu"), F.sum("v").alias("bv"),
-                  F.sum(d38("u") * d38("u")).alias("buu"),
-                  F.sum(d38("v") * d38("v")).alias("bvv"),
-                  F.sum(d38("u") * d38("v")).alias("buv")))
+                  F.sum(d38(F.col("u")) * d38(F.col("u"))).alias("buu"),
+                  F.sum(d38(F.col("v")) * d38(F.col("v"))).alias("bvv"),
+                  F.sum(d38(F.col("u")) * d38(F.col("v"))).alias("buv")))
     tot = per_b.agg(
         F.sum("c").alias("__n"), F.count("*").alias("__bk"),
         F.sum("bu").alias("__tu"), F.sum("bv").alias("__tv"),
@@ -1270,7 +1277,7 @@ def ratio_jackknife(df: DataFrame, *, num_col: str, den_col: str,
         F.max("__suu").alias("__suu"), F.max("__svv").alias("__svv"),
         F.max("__suv").alias("__suv"),
         F.sum("r_loo").alias("__sr"),
-        F.sum(d38("r_loo") * d38("r_loo")).alias("__srr"))
+        F.sum(d38(F.col("r_loo")) * d38(F.col("r_loo"))).alias("__srr"))
     bk = F.col("b_buckets").cast("double")
     rbar = F.col("__sr").cast("double") / bk
     var_j = (F.lit(1.0) - F.lit(1.0) / bk) \
@@ -1360,7 +1367,6 @@ def bh_fdr(df: DataFrame, *, p_col: str, id_col: str,
         "__b",
         F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__off"))
     tot = bc.agg(F.sum("__c").cast("long").alias("__m"))
-    d38 = lambda c: c.cast("decimal(38,0)")
     r = (r.join(F.broadcast(boff), "__b")
          .crossJoin(F.broadcast(tot))
          .withColumn("i", (F.col("__off") + F.col("__i_in")).cast("long")))
@@ -1446,7 +1452,6 @@ def change_point(df: DataFrame, *, key_col: str, order_col: str,
     """
     from pyspark.sql import Window
 
-    d38 = lambda c: c.cast("decimal(38,0)")
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     base = (df.filter(v.isNotNull())
             .select(F.col(key_col).alias("key"),
@@ -1638,7 +1643,6 @@ def trimmed_stats(df: DataFrame, *, value_col: str, id_col: str,
 
     B = int(n_buckets)
     pn, pd_ = int(trim_num), int(trim_den)
-    d38 = lambda c: c.cast("decimal(38,0)")
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     base = (df.filter(v.isNotNull())
             .select(F.col(id_col).alias("id"), v.alias("vm")))
@@ -1779,7 +1783,6 @@ def gini_concentration(df: DataFrame, *, value_col: str, id_col: str,
     from pyspark.sql import Window
 
     B = int(n_buckets)
-    d38 = lambda c: c.cast("decimal(38,0)")
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     base = (df.filter(v.isNotNull())
             .select(F.col(id_col).alias("id"), v.alias("vm")))
@@ -1850,7 +1853,6 @@ def spearman_rho(df: DataFrame, *, x_col: str, y_col: str,
     from pyspark.sql import Window
 
     B = int(n_buckets)
-    d38 = lambda c: c.cast("decimal(38,0)")
     xm = F.round(F.col(x_col).cast("double") * 1e6).cast("long")
     ym = F.round(F.col(y_col).cast("double") * 1e6).cast("long")
     base = (df.filter(xm.isNotNull() & ym.isNotNull())
@@ -1924,7 +1926,6 @@ def welch_ttest(df: DataFrame, *, value_col: str, group_col: str,
     Output one row: (n_a, n_b, mean_a, mean_b, t, df, cohen_d),
     means in original units, all rounded to 6.
     """
-    d38 = lambda c: c.cast("decimal(38,0)")
     m = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     g = F.col(group_col)
     base = (df.filter(m.isNotNull() & g.isin([group_a, group_b]))
@@ -1949,7 +1950,6 @@ def welch_ttest(df: DataFrame, *, value_col: str, group_col: str,
     # branches evaluate), so every denominator that CAN be zero
     # (empty/singleton group, zero SE) is nulled first — NULL then
     # propagates into the same NULL the guards would have produced.
-    nz = lambda den: F.when(den != 0, den)
     mean_a, mean_b = sa / nz(na), sb / nz(nb)
     # (n−1)·s² · n  =  n·Σx² − (Σx)²  — exact in decimal, one double cast
     va_num = na * saa - sa * sa          # = n_a² · (n_a−1)/n_a · s²_a
@@ -1997,8 +1997,6 @@ def anova_oneway(df: DataFrame, *, value_col: str,
     Output one row: (k, n, ss_between, ss_within, f, eta2) with the
     sums of squares in original units², all rounded to 6.
     """
-    d38 = lambda c: c.cast("decimal(38,0)")
-    nz = lambda den: F.when(den != 0, den)
     m = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     base = (df.filter(m.isNotNull() & F.col(group_col).isNotNull())
             .select(F.col(group_col).alias("__g"), m.alias("__m")))
@@ -2283,7 +2281,6 @@ def randomization_test(df: DataFrame, *, id_col: str, group_col: str,
               .otherwise(F.lit(0).cast("decimal(38,0)"))).alias("psa"),
         F.sum(F.when(~F.col("pa"), F.col("x").cast("decimal(38,0)"))
               .otherwise(F.lit(0).cast("decimal(38,0)"))).alias("psb"))
-    nz = lambda den: F.when(den != 0, den)
     d_b = F.round(F.abs(
         F.col("psa").cast("double") / nz(F.col("ra").cast("double"))
         - F.col("psb").cast("double")
@@ -2379,7 +2376,6 @@ def mcnemar_test(df: DataFrame, *, a_col: str, b_col: str) -> DataFrame:
     n_both/n_neither prefixed because ``both`` is a reserved word in
     several engines.
     """
-    nz = lambda den: F.when(den != 0, den)
     a = F.col(a_col).cast("boolean")
     bb = F.col(b_col).cast("boolean")
     cnt = lambda cond: F.sum(F.when(cond, 1).otherwise(0)).cast("long")
@@ -2413,7 +2409,6 @@ def sign_test(df: DataFrame, *, x_col: str, y_col: str) -> DataFrame:
 
     Output one row: (n, n_pos, n_neg, n_tie, z).
     """
-    nz = lambda den: F.when(den != 0, den)
     xm = F.round(F.col(x_col).cast("double") * 1e6).cast("long")
     ym = F.round(F.col(y_col).cast("double") * 1e6).cast("long")
     cnt = lambda cond: F.sum(F.when(cond, 1).otherwise(0)).cast("long")
@@ -2503,7 +2498,6 @@ def cochrans_q(df: DataFrame, *, cols: list[str]) -> DataFrame:
     k = len(cols)
     if k < 2:
         raise ValueError("need at least 2 condition columns")
-    nz = lambda den: F.when(den != 0, den)
     bs = [F.col(c).cast("boolean").cast("int") for c in cols]
     row_sum = sum(bs[1:], bs[0])
     base = df.select(*[b.alias(f"__c{i}") for i, b in enumerate(bs)],
@@ -2556,8 +2550,6 @@ def cronbach_alpha(df: DataFrame, *, cols: list[str]) -> DataFrame:
     k = len(cols)
     if k < 2:
         raise ValueError("need at least 2 item columns")
-    d38 = lambda c: c.cast("decimal(38,0)")
-    nz = lambda den: F.when(den != 0, den)
     ms = [F.round(F.col(c).cast("double") * 1e6).cast("long")
           for c in cols]
     tot = sum(ms[1:], ms[0])
@@ -2612,8 +2604,6 @@ def friedman_test(df: DataFrame, *, cols: list[str]) -> DataFrame:
     k = len(cols)
     if k < 2:
         raise ValueError("need at least 2 treatment columns")
-    d38 = lambda c: c.cast("decimal(38,0)")
-    nz = lambda den: F.when(den != 0, den)
     ms = [F.round(F.col(c).cast("double") * 1e6).cast("long")
           for c in cols]
     ranks = []
@@ -2677,8 +2667,6 @@ def runs_test(df: DataFrame, *, by: str, order_col: str,
     """
     from pyspark.sql import Window
 
-    nz = lambda den: F.when(den != 0, den)
-    d38 = lambda c: c.cast("decimal(38,0)")
     w = Window.partitionBy(by).orderBy(F.col(order_col).asc(),
                                        F.col(tiebreak_col).asc())
     x = F.expr(flag_expr).cast("int")
@@ -2739,8 +2727,6 @@ def durbin_watson_by_key(df: DataFrame, *, by: str, x_col: str,
     """
     from pyspark.sql import Window
 
-    d38 = lambda c: c.cast("decimal(38,0)")
-    nz = lambda den: F.when(den != 0, den)
     xm = F.round(F.col(x_col).cast("double") * 1e6).cast("long")
     ym = F.round(F.col(y_col).cast("double") * 1e6).cast("long")
     base = (df.filter(xm.isNotNull() & ym.isNotNull())
@@ -2852,7 +2838,6 @@ def binary_segmentation(df: DataFrame, *, key_col: str, order_col: str,
     """
     from pyspark.sql import Window
 
-    d38 = lambda c: c.cast("decimal(38,0)")
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     base = (df.filter(v.isNotNull())
             .select(F.col(key_col).alias("key"),
@@ -2953,7 +2938,6 @@ def mann_kendall_by_key(df: DataFrame, *, by: str, ts_col: str,
     """
     from pyspark.sql import Window
 
-    nz = lambda den: F.when(den != 0, den)
     vm = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     base = (df.filter(vm.isNotNull())
             .select(F.col(by).alias("__k"), F.col(ts_col).alias("__t"),
@@ -3018,7 +3002,6 @@ def bowker_test(df: DataFrame, *, a_col: str, b_col: str) -> DataFrame:
     Output one row: (n, k, n_pairs_used, b_micro, b) — b_micro the
     exact snapped integer total, b = b_micro/10⁶ for reading.
     """
-    nz = lambda den: F.when(den != 0, den)
     cells = (df.filter(F.col(a_col).isNotNull()
                        & F.col(b_col).isNotNull())
              .groupBy(F.col(a_col).alias("__a"),
@@ -3080,8 +3063,6 @@ def partial_correlation(df: DataFrame, *, x_col: str, y_col: str,
 
     Output one row: (n, r_xy, r_xz, r_yz, r_xy_z).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")
-    nz = lambda den: F.when(den != 0, den)
     cols = {}
     for nm, c in (("x", x_col), ("y", y_col), ("z", z_col)):
         cols[nm] = F.round(F.col(c).cast("double") * 1e6).cast("long")
@@ -3142,8 +3123,6 @@ def cramers_v(df: DataFrame, *, a_col: str, b_col: str) -> DataFrame:
 
     Output one row: (n, r, c, chi2, v).
     """
-    nz = lambda den: F.when(den != 0, den)
-    d38 = lambda c: c.cast("decimal(38,0)")
     base = (df.filter(F.col(a_col).isNotNull()
                       & F.col(b_col).isNotNull())
             .select(F.col(a_col).alias("__a"),
@@ -3204,8 +3183,6 @@ def kendall_tau_by_key(df: DataFrame, *, by: str, x_col: str,
 
     Output per key: (by, n, s, n0, n1, n2, tau_b).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     xm = F.round(F.col(x_col).cast("double") * 1e6).cast("long")
     ym = F.round(F.col(y_col).cast("double") * 1e6).cast("long")
     base = (df.filter(xm.isNotNull() & ym.isNotNull())
@@ -3272,8 +3249,6 @@ def cohens_d(df: DataFrame, *, value_col: str, group_col: str,
     filter + one 2-group agg; no shuffle beyond the partial-agg
     reduce.  Output one row: (n_a, n_b, mean_a, mean_b, sp, d, g).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     g = F.col(group_col)
     base = (df.filter(g.isin([group_a, group_b]) & v.isNotNull())
@@ -3351,8 +3326,6 @@ def kruskal_wallis(df: DataFrame, *, value_col: str, group_col: str,
     """
     from pyspark.sql import Window
 
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     B = int(n_buckets)
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     g = F.col(group_col)
@@ -3449,8 +3422,6 @@ def ljung_box_by_key(df: DataFrame, *, key_col: str, order_col: str,
     L = int(max_lag)
     if L < 1:
         raise ValueError("max_lag must be >= 1")
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     w = Window.partitionBy(key_col).orderBy(
         F.col(order_col).asc(), F.col(tiebreak_col).asc())
     x = F.col(value_col).cast("long")
@@ -3556,10 +3527,12 @@ def siegel_slope_by_key(df: DataFrame, *, x_col: str, y_col: str,
     # (`div`, trunc-toward-zero) — double division + cast-to-long gives
     # the same value in range but ROUNDS before truncating once
     # |sum| > 2^53 (~9e15 micro-slope, reachable with micro-hour x
-    # gaps), while the q339 oracle's HUGEINT `//` stays exact
+    # gaps), while the q339 oracle's HUGEINT `//` stays exact; the sum
+    # of two longs can itself pass BIGINT, so it runs in DECIMAL(38,0)
+    mid_mean = "sum(cast({} as decimal(38,0))) div count(*)"
     inner = (rk.filter((F.col("__rn") == k1) | (F.col("__rn") == k2))
              .groupBy("__k", "__ta")
-             .agg(F.expr("sum(__s) div count(*)").cast("long")
+             .agg(F.expr(mid_mean.format("__s")).cast("long")
                   .alias("__m")))
     w_out = Window.partitionBy("__k").orderBy("__m", "__ta")
     ro = (inner.withColumn("__rn", F.row_number().over(w_out))
@@ -3570,7 +3543,7 @@ def siegel_slope_by_key(df: DataFrame, *, x_col: str, y_col: str,
     outer = (ro.filter((F.col("__rn") == k1o) | (F.col("__rn") == k2o))
              .groupBy("__k")
              .agg(F.max("__na").cast("long").alias("n_anchors"),
-                  F.expr("sum(__m) div count(*)").cast("long")
+                  F.expr(mid_mean.format("__m")).cast("long")
                   .alias("slope_micro")))
     return (n_per.join(outer, "__k", "left")
             .select(F.col("__k").alias(by), "n",
@@ -3620,8 +3593,6 @@ def jonckheere_terpstra(df: DataFrame, *, value_col: str,
     if k < 2:
         raise ValueError("order needs >= 2 groups")
     B = int(n_buckets)
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     g = F.col(group_col)
     base = (df.filter(v.isNotNull() & g.isin(labels))
@@ -3734,8 +3705,6 @@ def ansari_bradley(df: DataFrame, *, value_col: str, group_col: str,
     from pyspark.sql import Window
 
     B = int(n_buckets)
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     g = F.col(group_col)
     base = (df.filter(v.isNotNull() & g.isin([group_a, group_b]))
@@ -3817,8 +3786,6 @@ def cvm_two_sample(df: DataFrame, *, value_col: str, group_col: str,
     from pyspark.sql import Window
 
     B = int(n_buckets)
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     g = F.col(group_col)
     base = (df.filter(v.isNotNull() & g.isin([group_a, group_b]))
@@ -3891,8 +3858,6 @@ def lepage_test(df: DataFrame, *, value_col: str, group_col: str,
     from pyspark.sql import Window
 
     B = int(n_buckets)
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     g = F.col(group_col)
     base = (df.filter(v.isNotNull() & g.isin([group_a, group_b]))
@@ -3987,8 +3952,6 @@ def gamma_somers_d(df: DataFrame, *, x_col: str, y_col: str) -> DataFrame:
     row.  Output one row: (n, c, d, t_x, t_y, gamma, somers_d_yx)
     with c/d/t the PAIR counts; C+D = 0 → NULL gamma/D.
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     x = F.col(x_col).cast("long")
     y = F.col(y_col).cast("long")
     cells = (df.filter(x.isNotNull() & y.isNotNull())
@@ -4060,8 +4023,6 @@ def cochran_armitage(df: DataFrame, *, group_col: str, label_expr: str,
     k = len(labels)
     if k < 2:
         raise ValueError("order needs >= 2 groups")
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     score = F.create_map(*[x for i, lab in enumerate(labels)
                            for x in (F.lit(lab), F.lit(i))])
     y = F.when(F.expr(label_expr), 1).otherwise(0)
@@ -4116,8 +4077,6 @@ def ks_uniform_test(df: DataFrame, *, value_col: str, lo: int, hi: int,
     W = int(hi) - int(lo)
     if W <= 0:
         raise ValueError("hi must exceed lo")
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     v = F.col(value_col).cast("long")
     base = df.filter(v.isNotNull()).select(v.alias("__v"))
     per_v = base.groupBy("__v").agg(F.count("*").cast("long").alias("__m"))
@@ -4173,8 +4132,6 @@ def dispersion_index_by_key(df: DataFrame, *, by: str, ts_col: str,
 
     Output per key: (by, n_events, n_buckets, d).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     b = F.floor(F.unix_micros(F.col(ts_col).cast("timestamp"))
                 / F.lit(int(bucket_secs) * 1_000_000)).cast("long")
     per = (df.filter(F.col(ts_col).isNotNull())
@@ -4264,8 +4221,6 @@ def mood_median_test(df: DataFrame, *, value_col: str, group_col: str,
     """
     from pyspark.sql import Window
 
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     B = int(n_buckets)
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     g = F.col(group_col)
@@ -4365,8 +4320,6 @@ def page_trend_test(df: DataFrame, *, cols: list[str]) -> DataFrame:
     k = len(cols)
     if k < 2:
         raise ValueError("need at least 2 ordered treatment columns")
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     ms = [F.round(F.col(c).cast("double") * 1e6).cast("long")
           for c in cols]
     ranks = []
@@ -4420,8 +4373,6 @@ def lins_ccc(df: DataFrame, *, x_col: str, y_col: str) -> DataFrame:
 
     Output one row: (n, ccc).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     x = F.round(F.col(x_col).cast("double") * 1e6).cast("long")
     y = F.round(F.col(y_col).cast("double") * 1e6).cast("long")
     base = (df.filter(x.isNotNull() & y.isNotNull())
@@ -4467,8 +4418,6 @@ def theil_u(df: DataFrame, *, a_col: str, b_col: str) -> DataFrame:
     Output one row: (n, mi_micro, h_a_micro, h_b_micro, u_a_given_b,
     u_b_given_a, u_sym).
     """
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     cells = (df.filter(F.col(a_col).isNotNull()
                        & F.col(b_col).isNotNull())
              .groupBy(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
@@ -4478,8 +4427,8 @@ def theil_u(df: DataFrame, *, a_col: str, b_col: str) -> DataFrame:
     tot = cells.agg(F.sum("n_ab").cast("long").alias("__n"))
     j = (cells.join(ma, "a").join(mb, "b").crossJoin(F.broadcast(tot)))
     pmi = F.round(
-        (F.log((d38("__n") * d38("n_ab")).cast("double"))
-         - F.log((d38("n_a") * d38("n_b")).cast("double"))) * 1e6
+        (F.log((d38(F.col("__n")) * d38(F.col("n_ab"))).cast("double"))
+         - F.log((d38(F.col("n_a")) * d38(F.col("n_b"))).cast("double"))) * 1e6
     ).cast("long")
     mi_c = F.round(F.col("n_ab").cast("double")
                    / F.col("__n").cast("double")
@@ -4533,7 +4482,6 @@ def gk_lambda(df: DataFrame, *, x_col: str, y_col: str) -> DataFrame:
     frame; one-row fold.  Output: (n, lambda_y_given_x,
     lambda_x_given_y, lambda_sym).
     """
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     cells = (df.filter(F.col(x_col).isNotNull()
                        & F.col(y_col).isNotNull())
              .groupBy(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
@@ -4583,8 +4531,6 @@ def stuart_tau_c(df: DataFrame, *, x_col: str, y_col: str) -> DataFrame:
 
     Output one row: (n, m, c, d, tau_c).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     x = F.col(x_col).cast("long")
     y = F.col(y_col).cast("long")
     cells = (df.filter(x.isNotNull() & y.isNotNull())
@@ -4649,7 +4595,6 @@ def turning_points_by_key(df: DataFrame, *, by: str, order_col: str,
     """
     from pyspark.sql import Window
 
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     w = Window.partitionBy(by).orderBy(F.col(order_col).asc(),
                                        F.col(tiebreak_col).asc())
     v = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
@@ -4700,8 +4645,6 @@ def jarque_bera_by_group(df: DataFrame, *, value_col: str,
     mean frame joined back at scan stage — no window, no data-sized
     structure.  Output per group: (group, n, skew, kurt_excess, jb).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     x = F.round(F.col(value_col).cast("double") * 1e2).cast("long")
     g = F.col(group_col)
     base = (df.filter(x.isNotNull() & g.isNotNull())
@@ -4771,8 +4714,6 @@ def welch_anova(df: DataFrame, *, value_col: str,
     Scale: one k-row groupBy that folds to one row — no window, no
     join.  Output one row: (k, n, f_stat, df1, df2).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     x = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     g = F.col(group_col)
     base = (df.filter(x.isNotNull() & g.isNotNull())
@@ -4851,8 +4792,6 @@ def jains_fairness(df: DataFrame, *, by: str,
     Scale: one map-side-combined groupBy + a one-row fold.
     Output one row: (n_groups, total, fairness).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     w = (F.lit(1).cast("long") if weight_col is None
          else F.col(weight_col).cast("long"))
     per = (df.filter(F.col(by).isNotNull())
@@ -4951,8 +4890,9 @@ def decision_stump(df: DataFrame, *, feature_col: str, label_expr: str,
                 F.max("__gmax").alias("gain_micro")))
     at = (g.select("__v", "__nl", "__pl")
           .withColumnRenamed("__v", "__tv"))
-    out = (win.join(F.broadcast(at),
-                    win["threshold_micro"] == at["__tv"])
+    # broadcast the 1-row winner, never the data-sized candidate frame
+    out = (at.join(F.broadcast(win),
+                   at["__tv"] == win["threshold_micro"])
            .select("n", "n_pos", "threshold_micro", "gain_micro",
                    F.col("__nl").alias("n_left"),
                    F.col("__pl").alias("pos_left")))
@@ -4981,8 +4921,6 @@ def two_prop_ztest(df: DataFrame, *, group_col: str, group_a, group_b,
 
     Output one row: (n_a, s_a, n_b, s_b, p_a, p_b, z).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     s = F.expr(success_expr).cast("int")
     g = F.col(group_col)
     agg = (df.filter(g.isin([group_a, group_b]) & s.isNotNull())
@@ -5036,7 +4974,6 @@ def cliffs_delta(df: DataFrame, *, value_col: str, group_col: str,
     data-sized window).  Empty arm → NULL δ.  Output one row:
     (n_a, n_b, u2_a, delta, magnitude).
     """
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     base = ks_mw_tests(df, value_col=value_col, group_col=group_col,
                        group_a=group_a, group_b=group_b,
                        n_buckets=n_buckets)
@@ -5081,8 +5018,6 @@ def wilcoxon_signed_rank(df: DataFrame, *, x_col: str, y_col: str,
     """
     from pyspark.sql import Window
 
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     B = int(n_buckets)
     x = F.round(F.col(x_col).cast("double") * 1e6).cast("long")
     y = F.round(F.col(y_col).cast("double") * 1e6).cast("long")
@@ -5154,7 +5089,6 @@ def cohens_h(df: DataFrame, *, group_col: str, group_a, group_b,
     Empty arm → NULL.  Output one row:
     (n_a, s_a, n_b, s_b, h, magnitude).
     """
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     s = F.expr(success_expr).cast("int")
     g = F.col(group_col)
     agg = (df.filter(g.isin([group_a, group_b]) & s.isNotNull())
@@ -5203,8 +5137,6 @@ def correlation_ratio(df: DataFrame, *, value_col: str,
     Scale: one k-row groupBy folding to one row.  Output one row:
     (k, n, eta_sq).
     """
-    d38 = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     x = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
     g = F.col(group_col)
     base = (df.filter(x.isNotNull() & g.isNotNull())
@@ -5260,7 +5192,6 @@ def periodogram_power(df: DataFrame, *, ts_col: str, value_col: str,
     """
     import math
 
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     omega = 2.0 * math.pi / float(period_seconds)
     t_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     x = F.round(F.col(value_col).cast("double") * 1e6).cast("long")
@@ -5309,7 +5240,6 @@ def rayleigh_test(df: DataFrame, *, ts_col: str, group_col: str,
     """
     import math
 
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     omega = 2.0 * math.pi / float(period_seconds)
     t_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
     tsec = t_us.cast("double") / F.lit(1e6)
@@ -5352,7 +5282,6 @@ def g_test(df: DataFrame, *, a_col: str, b_col: str) -> DataFrame:
     Scale: the q262 shape — one cell exchange + marginal joins.
     Output one row: (n, r, c, df, g_micro, g).
     """
-    d38 = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     cells = df.groupBy(F.col(a_col).alias("a"),
                        F.col(b_col).alias("b")).agg(
         F.count("*").cast("long").alias("n_ab"))
@@ -5363,8 +5292,8 @@ def g_test(df: DataFrame, *, a_col: str, b_col: str) -> DataFrame:
                     F.countDistinct("b").cast("long").alias("__c"))
     j = (cells.join(ma, "a").join(mb, "b").crossJoin(F.broadcast(tot)))
     pmi = F.round(
-        (F.log((d38("__n") * d38("n_ab")).cast("double"))
-         - F.log((d38("n_a") * d38("n_b")).cast("double"))) * 1e6
+        (F.log((d38(F.col("__n")) * d38(F.col("n_ab"))).cast("double"))
+         - F.log((d38(F.col("n_a")) * d38(F.col("n_b"))).cast("double"))) * 1e6
     ).cast("long")
     contrib = (F.col("n_ab") * pmi).cast("long")
     agg = j.agg(F.max("__n").alias("n"), F.max("__r").alias("r"),
@@ -5399,7 +5328,6 @@ def kupiec_pof(df: DataFrame, *, fail_expr: str,
 
     Output one row: (n, x, rate, p0, lr).
     """
-    nz = lambda den: F.when(den != 0, den)  # noqa: E731
     if not (0 < p0_num < p0_den):
         raise ValueError("need 0 < p0_num/p0_den < 1")
     f = F.expr(fail_expr).cast("int")

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ultraviolet_spark.functions.udfs import cp_class_hist_udf, extract_stage
+from ultraviolet_spark.functions.udfs import extract_stage
 from ultraviolet_spark.operators.windows import (
     SESSION_GAP_SECS_DEFAULT,
     _w,
@@ -42,7 +42,9 @@ def feature_vector(
     extra_cols: tuple[str, ...] = (),
     bucket_col: str | None = None,
 ) -> DataFrame:
-    """text_extracted → features (SURVEY.md §1.2 schema).  All window
+    """text_extracted → features (SURVEY.md §1.2 schema).  The input
+    comes from ``extract_stage(..., with_features=True)``, whose fused
+    kernel pass already carries text_len and cp_hist.  All window
     frames end at currentRow — no temporal leakage.
 
     ``bucket_col``: name of a materialized bucket column (written by
@@ -51,15 +53,8 @@ def feature_vector(
     bucketed-table scan satisfies the clustering requirement and the
     whole feature stage plans with ZERO exchanges (tests/test_layout.py).
     """
-    f = text_extracted
     keys = by if bucket_col is None else [bucket_col, by]
-    # skip per-row feature UDFs when the extract stage already fused
-    # them into its kernel pass (with_features=True)
-    if "text_len" not in f.columns:
-        f = f.withColumn("text_len", F.length("text").cast("long"))
-    if "cp_hist" not in f.columns:
-        f = f.withColumn("cp_hist", cp_class_hist_udf("text"))
-    f = with_lang_stability(f, by=keys, order=order)
+    f = with_lang_stability(text_extracted, by=keys, order=order)
     f = sessionize(f, by=keys, order=order, gap_secs=gap_secs)
     f = with_lags(f, ["text_len"], by=keys, order=order)
     # forward-fill of the last *cleanly decoded* length: rows whose html
@@ -134,7 +129,8 @@ def run_checkpointed_pipeline(spark, pages: DataFrame, warehouse: str,
     # cross-stage audit table (north_rule 'metrics tables').
     fp1 = fingerprint("text_extracted", inputs_key)
     te, resumed["text_extracted"] = run_stage(
-        spark, fmt, "text_extracted", fp1, lambda: extract_stage(pages),
+        spark, fmt, "text_extracted", fp1,
+        lambda: extract_stage(pages, with_features=True),
         observe={"text_bytes": F.sum(F.length("text")),
                  "min_warc_ts": F.min(F.unix_micros(
                      F.col("warc_ts").cast("timestamp"))),

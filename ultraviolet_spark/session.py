@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the ultraviolet_spark package
+_CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 ENGINE_CONFS = {
     # Arrow boundary: the engine's hot path crosses JVM→Python per batch.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -60,6 +63,9 @@ def get_spark(
         builder = builder.config(f"spark.executorEnv.{k}", v)
     if not os.environ.get("SPARK_MASTER"):          # cluster sets its own
         builder = builder.master(f"local[{cores}]")
+        # local workers import the package from this checkout, so a
+        # script started from any working directory works
+        builder = builder.config("spark.executorEnv.PYTHONPATH", _CHECKOUT_ROOT)
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)
     builder = builder.config(
